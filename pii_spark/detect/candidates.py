@@ -1,6 +1,6 @@
 """PII span candidate generation + overlap resolution.
 
-NOTE: the trained head (artifacts/token_head.npz) consumes this module's
+NOTE: the trained head (detect/token_head.npz) consumes this module's
 candidates as input features. Changing candidate behavior shifts the
 feature distribution the head was trained on — retrain with
 scripts/train_head.py after any change here, or serving quality drifts.

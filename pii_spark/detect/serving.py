@@ -2,17 +2,21 @@
 
 Reproduces the reference's serving semantics end to end
 (evaluation/model_evaluation.py:243-281), replacing the RoBERTa forward
-pass with the deterministic candidate scorer (candidates.py), which
-plays the role of a model trained to convergence on this synthetic
-distribution:
+pass with a trained softmax head over hashed sparse features
+(scripts/train_head.py), whose inputs include the rule candidates
+(candidates.py):
 
   tokenize (offsets)                       → tokenizer.py
-  per-token logits [seq, 37]               → _logits_for_doc
+  per-token logits [seq, 37]               → features.py + the head
   softmax → max prob                       → numpy, vectorized
   confidence < 0.3 and pred != O → force O → model_evaluation.py:259-269
   id2label decode                          → :272
   special-token strip ((0,0) offsets)      → :275-281
   BILOU → entity spans                     → labeling.decode_bilou
+
+The head ships inside this package (token_head.npz next to this file),
+so a checkout and a ``--py-files`` zip serve the same model. A missing
+or stale head raises; there is no rule-only fallback.
 
 Unlike the reference's batch-size-1 loop (:233, the #1 anti-pattern
 SURVEY §4 flags), ``serve_batch`` processes whole Arrow batches and is
@@ -21,13 +25,12 @@ what the Spark pipeline calls from mapInPandas.
 
 from __future__ import annotations
 
-import math
+import hashlib
+import importlib.resources
+import re
 from typing import NamedTuple
 
 import numpy as np
-
-import re
-from pathlib import Path
 
 from ..config import CONFIDENCE_THRESHOLD, ID2LABEL, LABEL2ID, NUM_LABELS, SCRUB_TYPES
 
@@ -35,43 +38,50 @@ from ..config import CONFIDENCE_THRESHOLD, ID2LABEL, LABEL2ID, NUM_LABELS, SCRUB
 _PLACEHOLDER_RE = re.compile(r"\[(?:" + "|".join(SCRUB_TYPES) + r")\]")
 from ..labeling import decode_bilou, spans_to_token_labels
 from ..tokenizer import tokenize_with_offsets
-from .candidates import Candidate, detect_spans
+from .candidates import detect_spans
+from .features import FEATURE_VERSION, featurize_doc_flat
 
 # frozen trained head (scripts/train_head.py): hashed-feature softmax
-# weights, loaded lazily ONCE per interpreter — the executor-singleton
-# pattern the reference needs for its model artifact (SURVEY §4)
-_HEAD_PATH = Path(__file__).resolve().parents[2] / "artifacts" / "token_head.npz"
+# weights, shipped as package data — a filesystem path in a checkout, a
+# zipfile.Path when the package is imported from a --py-files zip.
+# Loaded lazily ONCE per interpreter — the executor-singleton pattern
+# the reference needs for its model artifact (SURVEY §4)
+_HEAD_PATH = importlib.resources.files(__package__) / "token_head.npz"
 _HEAD_W = None
-_HEAD_TRIED = False
 
 
-def _head_weights():
-    global _HEAD_W, _HEAD_TRIED
-    if not _HEAD_TRIED:
-        _HEAD_TRIED = True
-        from .features import FEATURE_VERSION
-
-        for cand in (_HEAD_PATH, Path("token_head.npz"),
-                     Path("artifacts/token_head.npz")):
-            try:
-                if cand.exists():
-                    z = np.load(cand)
-                    if int(z.get("feature_version", -1)) != FEATURE_VERSION:
-                        continue  # stale artifact → rule fallback
-                    _HEAD_W = z["W"].astype(np.float32)
-                    break
-            except (OSError, ValueError):
-                continue
+def _head_weights() -> np.ndarray:
+    """The head's weight matrix (float32, DIM×37). Raises when the
+    artifact is missing or was trained for another FEATURE_VERSION:
+    serving never silently degrades to a different model."""
+    global _HEAD_W
+    if _HEAD_W is None:
+        if not _HEAD_PATH.is_file():
+            raise FileNotFoundError(
+                f"trained head {_HEAD_PATH} is missing — it ships inside "
+                "the pii_spark package (scripts/train_head.py writes it, "
+                "scripts/build_pyfiles.py zips it)"
+            )
+        with _HEAD_PATH.open("rb") as f:
+            z = np.load(f)
+            version = int(z.get("feature_version", -1))
+            if version != FEATURE_VERSION:
+                raise RuntimeError(
+                    f"trained head {_HEAD_PATH} has feature_version="
+                    f"{version} but features.py is at FEATURE_VERSION="
+                    f"{FEATURE_VERSION} — retrain with scripts/train_head.py"
+                )
+            _HEAD_W = z["W"].astype(np.float32)
     return _HEAD_W
 
-# logit placed on the winning BILOU tag such that softmax over 37 labels
-# yields exactly the candidate's confidence: L = ln(c*(K-1)/(1-c))
-_K1 = NUM_LABELS - 1
 
-
-def _conf_logit(conf: float) -> float:
-    conf = min(max(conf, 1e-4), 1 - 1e-4)
-    return math.log(conf * _K1 / (1.0 - conf))
+def head_identity() -> str:
+    """Which model serves: the head artifact's sha256 plus
+    FEATURE_VERSION. Loads the head first, so a missing or stale one
+    raises here rather than on an executor."""
+    _head_weights()
+    sha = hashlib.sha256(_HEAD_PATH.read_bytes()).hexdigest()
+    return f"{sha}:fv{FEATURE_VERSION}"
 
 
 def _transition_matrix() -> np.ndarray:
@@ -232,84 +242,50 @@ class _TokenIndex:
         return self.real_idx[lo:hi]
 
 
-def _logits_for_doc(
-    text: str,
-    offsets: list[tuple[int, int]],
-    cands: list[Candidate],
-    tindex: _TokenIndex | None = None,
-) -> np.ndarray:
-    n = len(offsets)
-    logits = np.zeros((n, NUM_LABELS), dtype=np.float32)
-    logits[:, LABEL2ID["O"]] = _conf_logit(0.985)
-    spans = [{"start": c.start, "end": c.end, "label": c.label} for c in cands]
-    tindex = tindex or _TokenIndex(offsets)
-    tags, _ = spans_to_token_labels(offsets, spans,
-                                    overlap=tindex.overlapping,
-                                    with_ids=False)
-    # map each token back to its candidate to carry per-candidate conf
-    for c in cands:
-        logit = _conf_logit(c.conf)
-        for t in tindex.overlapping(c.start, c.end):
-            if tags[t] != "O":
-                logits[t, LABEL2ID["O"]] = 0.0
-                logits[t, LABEL2ID.get(tags[t], 0)] = logit
-    return logits
-
-
-def serve_doc(text: str, scrub_ip: bool = True) -> DocResult:
+def serve_doc(text: str) -> DocResult:
     tokens, offsets, _ = tokenize_with_offsets(text, with_ids=False)
     cands = detect_spans(text)
+    # IP is NOT in the 37-label space (config_and_labels.py:26-45), so IP
+    # candidates never enter the logit matrix — LABEL2ID.get(tag, 0)
+    # would silently write them into the O column (ADVICE r1, high).
+    # IPs are appended after the decode instead.
     ip_cands = [c for c in cands if c.label == "IP"]
     non_ip = [c for c in cands if c.label != "IP"]
     tindex = _TokenIndex(offsets)
     W = _head_weights()
-    if W is not None:
-        # trained head (primary model): per-token logits from hashed
-        # sparse features, with the rule candidates as input features —
-        # measurably better recall than the rule overlay alone
-        from .features import featurize_doc_flat
-
-        cand_spans = [
-            {"start": c.start, "end": c.end, "label": c.label}
-            for c in non_ip
-        ]
-        cand_tags, _ = spans_to_token_labels(offsets, cand_spans,
-                                             overlap=tindex.overlapping,
-                                             with_ids=False)
-        confs = [0.0] * len(tokens)
-        for c in non_ip:
-            for t in tindex.overlapping(c.start, c.end):
-                confs[t] = max(confs[t], c.conf)
-        flat, lens = featurize_doc_flat(text, tokens, offsets, cand_tags,
-                                        confs)
-        logits = np.zeros((len(tokens), NUM_LABELS), dtype=np.float32)
-        if flat.size:
-            gathered = W[flat]
-            bounds = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=bounds[1:])
-            nonzero = lens > 0
-            summed = np.add.reduceat(gathered, bounds[nonzero], axis=0)
-            logits[nonzero] = summed
-        logits[lens == 0, LABEL2ID["O"]] = 10.0  # specials
-        # rule overlay as a soft one-sided prior: add support where a
-        # candidate covers the token (keeps the head from splitting a
-        # matched span at a weak interior token) but never push toward O
-        # where rules are silent — that would tax the head's recall
-        for c in non_ip:
-            if c.conf < 0.9:
-                continue
-            boost = 2.5 if c.conf >= 0.95 else 1.5
-            for t in tindex.overlapping(c.start, c.end):
-                if cand_tags[t] != "O":
-                    logits[t, LABEL2ID.get(cand_tags[t], 0)] += boost
-    else:
-        # rule-only fallback (artifact not shipped). IP is NOT in the
-        # 37-label space (config_and_labels.py:26-45), so IP candidates
-        # must never enter the logit matrix — LABEL2ID.get(tag, 0) would
-        # silently write them into the O column and the span would leak
-        # unscrubbed (ADVICE r1, high). IPs are appended below, exactly
-        # as in the head path.
-        logits = _logits_for_doc(text, offsets, non_ip, tindex)
+    # per-token logits from hashed sparse features, with the rule
+    # candidates as input features
+    cand_spans = [
+        {"start": c.start, "end": c.end, "label": c.label} for c in non_ip
+    ]
+    cand_tags, _ = spans_to_token_labels(offsets, cand_spans,
+                                         overlap=tindex.overlapping,
+                                         with_ids=False)
+    confs = [0.0] * len(tokens)
+    for c in non_ip:
+        for t in tindex.overlapping(c.start, c.end):
+            confs[t] = max(confs[t], c.conf)
+    flat, lens = featurize_doc_flat(text, tokens, offsets, cand_tags, confs)
+    logits = np.zeros((len(tokens), NUM_LABELS), dtype=np.float32)
+    if flat.size:
+        gathered = W[flat]
+        bounds = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1], out=bounds[1:])
+        nonzero = lens > 0
+        summed = np.add.reduceat(gathered, bounds[nonzero], axis=0)
+        logits[nonzero] = summed
+    logits[lens == 0, LABEL2ID["O"]] = 10.0  # specials
+    # rule overlay as a soft one-sided prior: add support where a
+    # candidate covers the token (keeps the head from splitting a
+    # matched span at a weak interior token) but never push toward O
+    # where rules are silent — that would tax the head's recall
+    for c in non_ip:
+        if c.conf < 0.9:
+            continue
+        boost = 2.5 if c.conf >= 0.95 else 1.5
+        for t in tindex.overlapping(c.start, c.end):
+            if cand_tags[t] != "O":
+                logits[t, LABEL2ID.get(cand_tags[t], 0)] += boost
 
     # softmax + confidence threshold (model_evaluation.py:253-269),
     # decoded under BILOU transition constraints (viterbi) so isolated
@@ -350,22 +326,21 @@ def serve_doc(text: str, scrub_ip: bool = True) -> DocResult:
     entities = [
         (lab, a, b, offsets[a][0], offsets[b][1]) for lab, a, b in ents
     ]
-    if scrub_ip:
-        # the model covers the 9 entity labels; IP spans (north-rule
-        # scrub type) come from the regex stage directly — on BOTH the
-        # head path and the rule-only fallback
-        for c in ip_cands:
-            toks_in = tindex.overlapping(c.start, c.end)
-            if len(toks_in) and not any(
-                a <= toks_in[-1] and b >= toks_in[0]
-                for _l, a, b, _cs, _ce in entities
-            ):
-                entities.append(
-                    ("IP", int(toks_in[0]), int(toks_in[-1]), c.start, c.end)
-                )
+    # the model covers the 9 entity labels; IP spans (north-rule scrub
+    # type) come from the regex stage directly. A model entity inside an
+    # IP span tags a fragment of it (the "44" of 192.168.10.44 as AGE)
+    # and gives way to the IP; one reaching outside the span keeps it.
+    for c in ip_cands:
+        toks_in = tindex.overlapping(c.start, c.end)
+        if not len(toks_in):
+            continue
+        first, last = int(toks_in[0]), int(toks_in[-1])
+        outside = [e for e in entities if e[1] < first or e[2] > last]
+        if not any(a <= last and b >= first for _l, a, b, _cs, _ce in outside):
+            entities = outside + [("IP", first, last, c.start, c.end)]
     return DocResult(tokens, offsets, tags, entities)
 
 
-def serve_batch(texts, scrub_ip: bool = True) -> list[DocResult]:
+def serve_batch(texts) -> list[DocResult]:
     """Arrow-batch serving entry point (called from mapInPandas)."""
-    return [serve_doc(t or "", scrub_ip) for t in texts]
+    return [serve_doc(t or "") for t in texts]

@@ -316,6 +316,11 @@ def run_quality_job(
     curated list): docs whose url domain is listed are dropped before
     the pipeline — the C4/RefinedWeb URL-filter tier, identity-
     recorded and resume-guarded exactly like ``recrawl_keys``."""
+    from ..detect.serving import head_identity
+
+    # which model serves, recorded per group commit; computed on the
+    # driver first, so a missing or stale head fails before any commit
+    head_id = head_identity()
     run_id = run_id or uuid.uuid4().hex[:12]
     out = IceliteTable(out_dir)
     audit = IceliteTable(audit_dir)
@@ -338,6 +343,19 @@ def run_quality_job(
                 "— resuming would mix keep semantics across groups; "
                 "reprocess into a fresh table or resume with the "
                 "original profile"
+            ),
+        )
+        # and the head: labels in one table must come from one model.
+        # Snapshots predating the field recorded no head ("unrecorded"),
+        # so resuming such a table refuses too.
+        refuse_summary_drift(
+            out, "token_head", head_id, "unrecorded",
+            lambda smry: "group" in smry, fallback=True,
+            message=lambda stale, cur: (
+                f"table {out_dir} has groups committed under token "
+                f"head(s) {stale} but this run serves {cur!r} — "
+                "resuming would mix models across groups; reprocess "
+                "into a fresh table or resume with the original head"
             ),
         )
     if input_format not in ("parquet", "warc"):
@@ -435,7 +453,8 @@ def run_quality_job(
     staging: str | None = None
     extra_summary: dict = {"profile": profile, "recrawl_keys": recrawl_id,
                            "classifier": clf_id,
-                           "domain_blocklist": bl_id}
+                           "domain_blocklist": bl_id,
+                           "token_head": head_id}
     if isinstance(corpus, str):
         exts = (
             ("*.parquet",) if input_format == "parquet"

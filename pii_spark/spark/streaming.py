@@ -73,6 +73,9 @@ def run_streaming_job(
     ``domain_blocklist`` drops listed url domains from every batch
     before the pipeline (broadcast anti-join; identity-guarded like
     the other knobs)."""
+    from ..detect.serving import head_identity
+
+    head_id = head_identity()  # fails a missing or stale head up front
     out = IceliteTable(out_dir)
 
     bl_id = "none"
@@ -240,6 +243,17 @@ def run_streaming_job(
                 "fresh checkpoint + table"
             ),
         )
+        refuse_summary_drift(
+            out, "token_head", head_id, "unrecorded", _this_ck,
+            fallback=bool(done),
+            message=lambda stale, cur: (
+                f"checkpoint {checkpoint_dir} has batches committed "
+                f"under token head(s) {stale} but this restart serves "
+                f"{cur!r} — labels would come from different models "
+                "across batches; use the original head or a fresh "
+                "checkpoint + table"
+            ),
+        )
 
     def process_batch(batch_df, batch_id: int) -> None:
         # foreachBatch gives at-least-once delivery: if the driver dies
@@ -277,7 +291,8 @@ def run_streaming_job(
                                     "profile": profile,
                                     "recrawl_keys": recrawl_id,
                                     "classifier": clf_id,
-                                    "domain_blocklist": bl_id})
+                                    "domain_blocklist": bl_id,
+                                    "token_head": head_id})
         done.add(key)
 
     q = (

@@ -1,17 +1,18 @@
 """Package pii_spark for spark-submit --py-files.
 
-Builds dist/pii_spark.zip (pure-Python package; word lists + the
-langid/perplexity models build deterministically at import). The
-trained token head (artifacts/token_head.npz) ships via --files and is
-picked up from the executor working dir. Cluster usage:
+Builds dist/pii_spark.zip: the pure-Python package (word lists + the
+langid/perplexity models build deterministically at import) plus the
+trained token head (pii_spark/detect/token_head.npz), which serving
+loads from inside the package — so the zip serves exactly the model a
+checkout serves. Cluster usage:
 
+    python scripts/build_pyfiles.py
     spark-submit --py-files dist/pii_spark.zip \\
-        --files artifacts/token_head.npz \\
         jobs/run_quality.py --input s3://corpus --output s3://out
 
-Without the artifact the detector falls back to rule-only serving —
-functional, a point of F1 lower. Every UDF closure references
-module-level functions only (no driver-captured state).
+dist/ is a build output and is not tracked; rebuild the zip after any
+change under pii_spark/. Every UDF closure references module-level
+functions only (no driver-captured state).
 """
 
 from __future__ import annotations
@@ -29,6 +30,10 @@ def build(out: Path | None = None) -> Path:
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sorted((ROOT / "pii_spark").rglob("*.py")):
             z.write(p, p.relative_to(ROOT))
+        # the head is already a compressed npz: store it as is, which
+        # also keeps the member seekable for np.load inside the zip
+        head = ROOT / "pii_spark" / "detect" / "token_head.npz"
+        z.write(head, head.relative_to(ROOT), zipfile.ZIP_STORED)
     return out
 
 

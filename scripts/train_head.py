@@ -8,7 +8,8 @@ Training data: docs [TRAIN_LO, TRAIN_HI) from the seed-42 corpus
 tokenizer. Eval ranges used elsewhere (0-20k) are excluded.
 
 Optimizer: averaged SGD on softmax cross-entropy with sparse updates.
-Artifact: artifacts/token_head.npz (float16 weight matrix DIM×37).
+Artifact: pii_spark/detect/token_head.npz (float16 weight matrix DIM×37),
+shipped inside the package and loaded by detect/serving.py.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ from pii_spark.textgrammar.generator import build_example  # noqa: E402
 from pii_spark.tokenizer import tokenize_with_offsets  # noqa: E402
 
 TRAIN_LO, TRAIN_HI = 20_000, 260_000
+HEAD = (Path(__file__).resolve().parents[1]
+        / "pii_spark" / "detect" / "token_head.npz")
 
 
 def doc_examples(doc_id: int):
@@ -72,17 +75,16 @@ def main(n_docs: int = TRAIN_HI - TRAIN_LO, epochs: int = 3,
 
     rng = np.random.default_rng(seed)
     W = np.zeros((DIM, NUM_LABELS), dtype=np.float32)
-    art = Path(__file__).resolve().parents[1] / "artifacts" / "token_head.npz"
-    if warm and art.exists():
+    if warm and HEAD.exists():
         # ADVICE r1: a stale artifact (feature-space change or DIM bump)
         # must not silently seed training with weights from a different
         # feature space — validate like serving.py does, else cold-start
-        z = np.load(art)
+        z = np.load(HEAD)
         w_old = z["W"]
         if (int(z.get("feature_version", -1)) == FEATURE_VERSION
                 and w_old.shape == (DIM, NUM_LABELS)):
             W = w_old.astype(np.float32)
-            print("warm start from", art)
+            print("warm start from", HEAD)
         else:
             print(f"WARNING: artifact feature_version="
                   f"{int(z.get('feature_version', -1))} shape={w_old.shape} "
@@ -107,13 +109,11 @@ def main(n_docs: int = TRAIN_HI - TRAIN_LO, epochs: int = 3,
         print(f"epoch {ep}: train acc {correct/n:.4f} "
               f"({time.time()-t0:.0f}s)")
 
-    out = Path(__file__).resolve().parents[1] / "artifacts"
-    out.mkdir(exist_ok=True)
-    tmp = out / ".token_head.tmp.npz"  # savez appends .npz if missing
+    tmp = HEAD.with_name(".token_head.tmp.npz")  # savez appends .npz if missing
     np.savez_compressed(tmp, W=W.astype(np.float16),
                         feature_version=np.int64(FEATURE_VERSION))
-    tmp.rename(out / "token_head.npz")  # atomic publish
-    print("saved", out / "token_head.npz")
+    tmp.rename(HEAD)  # atomic publish
+    print("saved", HEAD)
 
 
 if __name__ == "__main__":

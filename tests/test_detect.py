@@ -111,24 +111,19 @@ def test_detector_deterministic():
         assert detect_spans(ex_text) == detect_spans(ex_text)
 
 
-def test_fallback_path_scrubs_ip(monkeypatch):
-    """ADVICE r1 (high): with the head artifact absent (the supported
-    --files-not-shipped fallback), IP spans must still be scrubbed.
-    B-IP/U-IP are not in the 37-label space, so routing IP candidates
-    through the logit matrix silently drops them."""
+def test_head_path_scrubs_ip():
+    """ADVICE r1 (high): IP spans must be scrubbed. B-IP/U-IP are not in
+    the 37-label space, so IP candidates bypass the logit matrix and are
+    appended after the decode. The head tags the trailing "44" of this
+    address as AGE; a model entity inside an IP span must give way to
+    the IP, or "192.168.10." leaks unscrubbed."""
     from pii_spark.detect import serving
 
-    monkeypatch.setattr(serving, "_HEAD_W", None)
-    monkeypatch.setattr(serving, "_HEAD_TRIED", True)
-    assert serving._head_weights() is None
+    assert serving._head_weights() is not None
     text = "server at 192.168.10.44 and mail a.b@gmail.com"
     res = serving.serve_doc(text)
     scrubbed = scrub_text(text, res.entities)
-    assert "[IP]" in scrubbed and "192.168.10.44" not in scrubbed
-    assert "[EMAIL]" in scrubbed
-    # scrub_ip=False still suppresses IP on the fallback path
-    res2 = serving.serve_doc(text, scrub_ip=False)
-    assert all(lab != "IP" for lab, *_ in res2.entities)
+    assert scrubbed == "server at [IP] and mail [EMAIL]"
 
 
 def test_digit_free_prefilter():

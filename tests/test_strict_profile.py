@@ -186,6 +186,63 @@ def test_resume_refuses_profile_mismatch(spark, tmp_path):
     assert out.read(spark).count() == 30
 
 
+def _other_head(tmp_path, monkeypatch):
+    """Serve the same weights re-saved uncompressed: same
+    FEATURE_VERSION, a different artifact sha256."""
+    import numpy as np
+
+    from pii_spark.detect import serving
+
+    z = np.load(serving._HEAD_PATH)
+    other = tmp_path / "token_head.npz"
+    np.savez(other, W=z["W"], feature_version=z["feature_version"])
+    monkeypatch.setattr(serving, "_HEAD_W", None)
+    monkeypatch.setattr(serving, "_HEAD_PATH", other)
+
+
+def test_resume_refuses_head_mismatch(spark, tmp_path, monkeypatch):
+    """Every group commit records which head served (artifact sha256 +
+    FEATURE_VERSION); a resume under another head refuses, and so does
+    a resume of a table whose groups recorded none."""
+    from pii_spark.icelite.catalog import IceliteTable
+    from pii_spark.spark.jobs import run_quality_job
+
+    corpus = generate_corpus(spark, 30).cache()
+    o, a = str(tmp_path / "o"), str(tmp_path / "a")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_quality_job(spark, corpus, o, a, groups=3,
+                        fail_after_groups=1)
+    with monkeypatch.context() as m:
+        _other_head(tmp_path, m)
+        with pytest.raises(RuntimeError, match="token head"):
+            run_quality_job(spark, corpus, o, a, groups=3)
+    out = run_quality_job(spark, corpus, o, a, groups=3)
+    assert out.read(spark).count() == 30
+    assert len({s.summary["token_head"] for s in out.snapshots()
+                if "group" in s.summary}) == 1
+
+    # groups committed before the head was recorded: "unrecorded"
+    tiny = spark.createDataFrame([(1,)], "x int")
+    IceliteTable(str(tmp_path / "o2")).append(tiny, summary={"group": 0})
+    IceliteTable(str(tmp_path / "a2")).append(tiny, summary={"group": 0})
+    with pytest.raises(RuntimeError, match="unrecorded"):
+        run_quality_job(spark, corpus, str(tmp_path / "o2"),
+                        str(tmp_path / "a2"), groups=2)
+
+
+def test_missing_head_fails_job_before_any_commit(spark, tmp_path,
+                                                  monkeypatch):
+    from pii_spark.detect import serving
+    from pii_spark.spark.jobs import run_quality_job
+
+    monkeypatch.setattr(serving, "_HEAD_W", None)
+    monkeypatch.setattr(serving, "_HEAD_PATH", tmp_path / "absent.npz")
+    with pytest.raises(FileNotFoundError, match="trained head"):
+        run_quality_job(spark, generate_corpus(spark, 10),
+                        str(tmp_path / "o"), str(tmp_path / "a"), groups=2)
+    assert not (tmp_path / "o").exists()
+
+
 def test_streaming_restart_refuses_profile_mismatch(spark, tmp_path):
     from pii_spark.spark.streaming import run_streaming_job
 
@@ -205,6 +262,19 @@ def test_streaming_restart_refuses_profile_mismatch(spark, tmp_path):
     out.append(out.read(spark).limit(0), summary={"pad": True})
     out.expire_snapshots(keep_last=1)
     with pytest.raises(RuntimeError, match="profile"):
+        run_streaming_job(spark, src, str(tmp_path / "o"), ck)
+
+
+def test_streaming_restart_refuses_head_mismatch(spark, tmp_path,
+                                                 monkeypatch):
+    from pii_spark.spark.streaming import run_streaming_job
+
+    src = str(tmp_path / "src")
+    generate_corpus(spark, 20).write.parquet(src)
+    ck = str(tmp_path / "ck")
+    run_streaming_job(spark, src, str(tmp_path / "o"), ck)
+    _other_head(tmp_path, monkeypatch)
+    with pytest.raises(RuntimeError, match="token head"):
         run_streaming_job(spark, src, str(tmp_path / "o"), ck)
 
 
