@@ -38,6 +38,16 @@ kill is at most one group's worth. ``compact_every=N`` interleaves
 icelite small-file compaction with the group commits (the operational
 sequence a long-running table actually sees), proving catalog
 maintenance composes with resume.
+
+Identical output on resume also needs every commit of a table to have
+run the same *semantics* — the settings that change which rows exist or
+what they say (profile, token head, recrawl keys ± near tier,
+classifier model, domain blocklist). This module defines them once for
+the batch job here and the streaming job in ``streaming.py``:
+``resolve_semantics`` returns the identity every commit summary records
+plus the one ingest chain (blocklist → recrawl drops → pipeline →
+classifier scores), and ``refuse_semantics_drift`` is the one resume
+guard over that identity.
 """
 
 from __future__ import annotations
@@ -46,12 +56,23 @@ import json
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..icelite.catalog import IceliteTable
+from ..quality.classifier import (
+    attach_quality_scores,
+    classifier_model_identity,
+    load_quality_model,
+)
+from .incr_dedup import (
+    drop_recrawls,
+    drop_recrawls_near,
+    recrawl_keys_identity,
+)
 from .pipeline import run_pipeline
 
 
@@ -193,35 +214,135 @@ def drop_blocklisted_domains(df, blocklist_df) -> "DataFrame":
     ).drop("__dom", "__reg")
 
 
-def refuse_summary_drift(
-    out, field: str, current, default, snap_filter, fallback: bool,
-    message,
+# Every summary field that changes which rows exist or what they say:
+# field -> (value for snapshots that predate the field, what a refusal
+# calls it). Snapshots from before a field existed ran the only
+# behaviour there was then (the default profile, no drop, no scores);
+# an unrecorded head or grouping is unknown, so it never matches.
+_SEMANTICS_FIELDS = {
+    "profile": ("default", "profile"),
+    "recrawl_keys": ("none", "recrawl key set"),
+    "classifier": ("none", "classifier model"),
+    "domain_blocklist": ("none", "domain blocklist"),
+    "token_head": ("unrecorded", "token head"),
+    "grouping": ("unrecorded", "group assignment"),
+}
+
+
+def resolve_semantics(
+    spark: SparkSession,
+    profile: str,
+    recrawl_keys: str | None,
+    recrawl_near: bool,
+    classifier_model: str | None,
+    domain_blocklist: str | None,
+) -> tuple[dict, Callable[[DataFrame, int | None], DataFrame]]:
+    """The ONE definition of a quality job's semantics, shared by the
+    batch and streaming jobs (the options are described in
+    :func:`run_quality_job`). Returns ``(identity, apply)``:
+
+    * ``identity`` — the fields every commit summary records and every
+      resume checks (:func:`refuse_semantics_drift`): profile, recrawl
+      key set (``:near``-suffixed with the near tier on), classifier
+      model, domain blocklist and token head;
+    * ``apply(df, partitions)`` — the ingest chain: blocklist anti-join
+      → exact recrawl drop → near recrawl drop → ``run_pipeline`` →
+      classifier scores. Every drop is row-local, so the chain composes
+      with a file group and a micro-batch alike.
+
+    The head identity is computed first, on the driver, so a missing or
+    stale head fails before any commit."""
+    from ..detect.serving import head_identity
+
+    head_id = head_identity()
+    if recrawl_near and recrawl_keys is None:
+        raise ValueError("recrawl_near needs recrawl_keys")
+    identity = {"profile": profile, "recrawl_keys": "none",
+                "classifier": "none", "domain_blocklist": "none",
+                "token_head": head_id}
+    bl_df = fp_df = sig_df = clf = None
+    geo: dict = {}
+    if domain_blocklist is not None:
+        identity["domain_blocklist"] = domain_blocklist_identity(
+            domain_blocklist)
+        bl_df = spark.read.parquet(domain_blocklist)
+    if recrawl_keys is not None:
+        keys = Path(recrawl_keys)
+        # with the near tier on, sig.parquet + geometry are load-
+        # bearing and fold into the identity
+        recrawl_id = recrawl_keys_identity(recrawl_keys,
+                                           include_sig=recrawl_near)
+        # static side read once per run, re-joined per group/batch
+        fp_df = spark.read.parquet(str(keys / "fp.parquet"))
+        if recrawl_near:
+            km_path = keys / "keys_meta.json"
+            if not km_path.exists():
+                raise FileNotFoundError(
+                    f"{km_path} is missing — the near tier needs the "
+                    "recorded signature geometry (run_base_keys "
+                    "writes it)"
+                )
+            geo = json.loads(km_path.read_text())
+            # the near tier is a SEMANTICS change: toggling it across a
+            # resume must refuse
+            recrawl_id = f"{recrawl_id}:near"
+            sig_df = spark.read.parquet(str(keys / "sig.parquet"))
+        identity["recrawl_keys"] = recrawl_id
+    if classifier_model is not None:
+        identity["classifier"] = classifier_model_identity(classifier_model)
+        clf = load_quality_model(spark, classifier_model)
+
+    def apply(df: DataFrame, partitions: int | None) -> DataFrame:
+        if bl_df is not None:
+            df = drop_blocklisted_domains(df, bl_df)
+        if fp_df is not None:
+            df = drop_recrawls(df, fp_df)
+        if sig_df is not None:
+            df = drop_recrawls_near(
+                df, sig_df, shingle_len=geo["shingle_len"],
+                stride=geo["stride"], bands=geo["bands"],
+            )
+        result = run_pipeline(df, partitions=partitions, profile=profile)
+        if clf is not None:
+            result = attach_quality_scores(result, *clf)
+        return result
+
+    return identity, apply
+
+
+def refuse_semantics_drift(
+    out: IceliteTable, identity: dict, snap_filter, fallback: bool,
+    where: str,
 ) -> None:
-    """ONE committed-summary drift guard (review r6: this pattern
-    existed four times — profile and recrawl keys, batch and
-    streaming). Collect ``field`` over committed snapshots
-    (``snap_filter(summary)`` picks the relevant ones — group commits,
-    or this checkpoint's stream batches) PLUS the expiry ledger carry;
-    snapshots predating the field count as ``default``, and
-    ``fallback`` substitutes ``{default}`` when every relevant
-    snapshot expired AND the caller knows commits exist (keeps the
-    check non-vacuous — review r5). Raises with
-    ``message(stale, current)`` — a CALLABLE, not a format string: the
-    messages embed user paths, and ``str.format`` over a path
-    containing braces would crash the refusal itself (review r6b) —
-    if any committed value differs from ``current``: semantics must
-    never depend on crash or restart timing."""
-    prev = {
-        s.summary.get(field, default)
-        for s in out.snapshots()
-        if snap_filter(s.summary)
-    }
-    prev.update(out._ledger_carry().get(field, []) or [])
-    if not prev and fallback:
-        prev = {default}
-    stale = prev - {current}
-    if stale:
-        raise RuntimeError(message(sorted(stale), current))
+    """ONE committed-summary drift guard for every semantics field.
+    For each field of ``identity``, collect its value over committed
+    snapshots (``snap_filter(summary)`` picks the relevant ones — group
+    commits, or this checkpoint's stream batches) PLUS the expiry
+    ledger carry; snapshots predating the field count as its
+    ``_SEMANTICS_FIELDS`` default, and ``fallback`` substitutes that
+    default when every relevant snapshot expired AND the caller knows
+    commits exist (keeps the check non-vacuous). Raises if
+    any committed value differs from this run's: semantics must never
+    depend on crash or restart timing. ``where`` names the committed
+    unit ("table X has groups"); the message is an f-string, never
+    ``str.format`` over it — user paths may contain braces."""
+    summaries = [s.summary for s in out.snapshots()
+                 if snap_filter(s.summary)]
+    carry = out._ledger_carry()
+    for field, current in identity.items():
+        default, words = _SEMANTICS_FIELDS[field]
+        prev = {smry.get(field, default) for smry in summaries}
+        prev.update(carry.get(field, []) or [])
+        if not prev and fallback:
+            prev = {default}
+        stale = prev - {current}
+        if stale:
+            raise RuntimeError(
+                f"{where} committed under {words}(s) {sorted(stale)} "
+                f"but this run uses {current!r} — resuming would mix "
+                f"{words} semantics across commits; reprocess into a "
+                f"fresh table or resume with the original {words}"
+            )
 
 
 def _stage_by_group(
@@ -270,7 +391,11 @@ def run_quality_job(
     into groups — zero staging cost). ``fail_after_groups``
     injects a crash for the resume test; ``compact_every=N`` compacts
     the output table after every N group commits. ``profile`` selects
-    the keep chain (run_pipeline's default/strict).
+    the keep chain (run_pipeline's default/strict). ``profile`` and the
+    four ingest options below are the job's semantics: resolved by
+    :func:`resolve_semantics`, recorded in every group summary, and
+    checked by a resume — as is, in DataFrame mode, the url-hash group
+    count (``grouping``).
 
     ``input_format`` (path mode only): ``"parquet"`` reads a curated
     corpus; ``"warc"`` points the job straight at a crawl dump —
@@ -316,145 +441,34 @@ def run_quality_job(
     curated list): docs whose url domain is listed are dropped before
     the pipeline — the C4/RefinedWeb URL-filter tier, identity-
     recorded and resume-guarded exactly like ``recrawl_keys``."""
-    from ..detect.serving import head_identity
-
-    # which model serves, recorded per group commit; computed on the
-    # driver first, so a missing or stale head fails before any commit
-    head_id = head_identity()
+    identity, apply = resolve_semantics(
+        spark, profile, recrawl_keys, recrawl_near, classifier_model,
+        domain_blocklist,
+    )
+    if input_format not in ("parquet", "warc"):
+        raise ValueError(f"unknown input_format {input_format!r}")
+    if not isinstance(corpus, str):
+        # the url-hash deal is a function of G: committed group ids
+        # resumed under another G (or resumed from a path-mode table)
+        # would duplicate some docs and lose others
+        identity["grouping"] = f"url_hash:{groups}"
     run_id = run_id or uuid.uuid4().hex[:12]
     out = IceliteTable(out_dir)
     audit = IceliteTable(audit_dir)
     done = out.committed_groups()
+    if done:
+        # a resume must run the SAME semantics the committed groups ran,
+        # or which rows exist and what they say would depend on crash
+        # timing
+        refuse_semantics_drift(
+            out, identity, lambda smry: "group" in smry, fallback=True,
+            where=f"table {out_dir} has groups",
+        )
     _backfill_missing_audit(spark, out, audit, done, run_id)
 
     pending = [g for g in range(groups) if g not in done]
-    if done:
-        # a resume must run the SAME keep chain the committed groups
-        # ran — mixing profiles across groups would make keep/drop
-        # depend on crash timing (the same silent-drift class as a
-        # changed file listing). Snapshots predating the field ran the
-        # only profile that existed then: default.
-        refuse_summary_drift(
-            out, "profile", profile, "default",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under "
-                f"profile(s) {stale} but this run requests {cur!r} "
-                "— resuming would mix keep semantics across groups; "
-                "reprocess into a fresh table or resume with the "
-                "original profile"
-            ),
-        )
-        # and the head: labels in one table must come from one model.
-        # Snapshots predating the field recorded no head ("unrecorded"),
-        # so resuming such a table refuses too.
-        refuse_summary_drift(
-            out, "token_head", head_id, "unrecorded",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under token "
-                f"head(s) {stale} but this run serves {cur!r} — "
-                "resuming would mix models across groups; reprocess "
-                "into a fresh table or resume with the original head"
-            ),
-        )
-    if input_format not in ("parquet", "warc"):
-        raise ValueError(f"unknown input_format {input_format!r}")
-    recrawl_id = "none"
-    recrawl_fp_df = recrawl_sig_df = None
-    recrawl_geo: dict = {}
-    if recrawl_near and recrawl_keys is None:
-        raise ValueError("recrawl_near needs recrawl_keys")
-    if recrawl_keys is not None:
-        from .incr_dedup import recrawl_keys_identity
-
-        # with the near tier on, sig.parquet + geometry are load-
-        # bearing and fold into the identity (review r7b)
-        recrawl_id = recrawl_keys_identity(recrawl_keys,
-                                           include_sig=recrawl_near)
-        recrawl_fp_df = spark.read.parquet(
-            str(Path(recrawl_keys) / "fp.parquet")
-        )
-        if recrawl_near:
-            # the near tier is a SEMANTICS change — fold it into the
-            # recorded identity so toggling it across a resume refuses
-            import json as _json
-
-            km_path = Path(recrawl_keys) / "keys_meta.json"
-            if not km_path.exists():
-                raise FileNotFoundError(
-                    f"{km_path} is missing — the near tier needs the "
-                    "recorded signature geometry (run_base_keys "
-                    "writes it)"
-                )
-            recrawl_geo = _json.loads(km_path.read_text())
-            recrawl_id = f"{recrawl_id}:near"
-            recrawl_sig_df = spark.read.parquet(
-                str(Path(recrawl_keys) / "sig.parquet")
-            )
-    if done:
-        # same drift class as the profile guard: groups committed with
-        # one recrawl-key set must not be resumed under another (or
-        # under none) — which docs exist in the output would depend on
-        # crash timing. Pre-recrawl snapshots recorded no field: "none".
-        refuse_summary_drift(
-            out, "recrawl_keys", recrawl_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under recrawl "
-                f"key set(s) {stale} but this run uses {cur!r} — "
-                "resuming would mix recrawl-drop semantics across "
-                "groups; reprocess into a fresh table or resume with "
-                "the original keys"
-            ),
-        )
-    bl_id = "none"
-    bl_df = None
-    if domain_blocklist is not None:
-        bl_id = domain_blocklist_identity(domain_blocklist)
-        bl_df = spark.read.parquet(domain_blocklist)
-    if done:
-        refuse_summary_drift(
-            out, "domain_blocklist", bl_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under domain "
-                f"blocklist(s) {stale} but this run uses {cur!r} — "
-                "resuming would mix URL-filter semantics across "
-                "groups; reprocess into a fresh table or resume with "
-                "the original blocklist"
-            ),
-        )
-    clf_id = "none"
-    clf_census = clf_meta = None
-    if classifier_model is not None:
-        from ..quality.classifier import (
-            classifier_model_identity,
-            load_quality_model,
-        )
-
-        clf_id = classifier_model_identity(classifier_model)
-        clf_census, clf_meta = load_quality_model(spark, classifier_model)
-    if done:
-        # and the classifier: scored and unscored groups (or groups
-        # scored by different models) must not share a table — same
-        # crash-timing-drift class again, plus a schema mismatch
-        refuse_summary_drift(
-            out, "classifier", clf_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under "
-                f"classifier model(s) {stale} but this run uses "
-                f"{cur!r} — resuming would mix score semantics (and "
-                "schemas) across groups; reprocess into a fresh table "
-                "or resume with the original model"
-            ),
-        )
     staging: str | None = None
-    extra_summary: dict = {"profile": profile, "recrawl_keys": recrawl_id,
-                           "classifier": clf_id,
-                           "domain_blocklist": bl_id,
-                           "token_head": head_id}
+    extra_summary: dict = dict(identity)
     if isinstance(corpus, str):
         exts = (
             ("*.parquet",) if input_format == "parquet"
@@ -562,28 +576,7 @@ def run_quality_job(
     processed = 0
     for g in pending:
         t0 = time.time()
-        part = group_df(g)
-        if bl_df is not None:
-            part = drop_blocklisted_domains(part, bl_df)
-        if recrawl_fp_df is not None:
-            from .incr_dedup import drop_recrawls
-
-            part = drop_recrawls(part, recrawl_fp_df)
-        if recrawl_sig_df is not None:
-            from .incr_dedup import drop_recrawls_near
-
-            part = drop_recrawls_near(
-                part, recrawl_sig_df,
-                shingle_len=recrawl_geo["shingle_len"],
-                stride=recrawl_geo["stride"],
-                bands=recrawl_geo["bands"],
-            )
-        result = run_pipeline(part, partitions=partitions,
-                              profile=profile)
-        if clf_census is not None:
-            from ..quality.classifier import attach_quality_scores
-
-            result = attach_quality_scores(result, clf_census, clf_meta)
+        result = apply(group_df(g), partitions)
         # Commit FIRST, then derive the audit stats from the committed
         # snapshot's own data files (VERDICT r4 #3). The old shape
         # cached the full pipeline output to stamp spark_partition_id()

@@ -589,3 +589,32 @@ def test_path_mode_refuses_legacy_hash_group_table(spark, tmp_path):
                        match="different group-assignment scheme"):
         run_quality_job(spark, str(corpus_dir), str(tmp_path / "o"),
                         str(tmp_path / "a"), groups=4)
+
+
+def test_dataframe_mode_refuses_a_different_grouping(spark, tmp_path):
+    """DataFrame mode deals rows by pmod(xxhash64(url), G): committed
+    group ids resumed under another G, or resumed from a path-mode
+    table's file deal, would duplicate some docs and lose others. The
+    url-hash group count is recorded per commit and a resume under any
+    other grouping refuses."""
+    corpus = generate_corpus(spark, 60).cache()
+    corpus_dir = tmp_path / "corpus"
+    corpus.repartition(4).write.parquet(str(corpus_dir))
+    o, a = str(tmp_path / "o"), str(tmp_path / "a")
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_quality_job(spark, corpus, o, a, groups=4,
+                        fail_after_groups=2)
+    with pytest.raises(RuntimeError, match="group assignment"):
+        run_quality_job(spark, corpus, o, a, groups=8)
+    out = run_quality_job(spark, corpus, o, a, groups=4)
+    urls = [r.url for r in out.read(spark).select("url").collect()]
+    assert len(urls) == len(set(urls)) == 60
+
+    # a path-mode table recorded a file deal, not a url-hash grouping
+    po, pa = str(tmp_path / "po"), str(tmp_path / "pa")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_quality_job(spark, str(corpus_dir), po, pa, groups=4,
+                        fail_after_groups=2)
+    with pytest.raises(RuntimeError, match="group assignment"):
+        run_quality_job(spark, corpus, po, pa, groups=4)

@@ -28,6 +28,25 @@ def test_streaming_matches_batch_and_checkpoints(spark, tmp_path):
     }
     assert got == batch  # streaming ≡ batch, byte-identical
 
+    # the batch job over the same dir: same rows, and its group commits
+    # record the same semantics as the stream's batch commits
+    from pii_spark.spark.jobs import run_quality_job
+
+    job = run_quality_job(spark, corpus_dir, str(tmp_path / "job"),
+                          str(tmp_path / "audit"), groups=2,
+                          partitions=4)
+    assert {r.url: (r.keep, r.scrubbed_text)
+            for r in job.read(spark).collect()} == got
+    fields = ("profile", "recrawl_keys", "classifier", "domain_blocklist",
+              "token_head")
+
+    def semantics(table, key):
+        return {tuple(s.summary[f] for f in fields)
+                for s in table.snapshots() if key in s.summary}
+
+    assert len(semantics(job, "group")) == 1
+    assert semantics(job, "group") == semantics(out, "stream_batch")
+
     # re-run with the same checkpoint: nothing new to process
     v_before = out.current_version()
     out2 = run_streaming_job(
@@ -181,7 +200,7 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
         ("u1", None, b"", "dup in same file", "en"),
         ("u2", None, b"", "two", "en"),
     ])
-    m1 = run_stream_dedup(spark, str(corpus), out, ckpt, groups=4)
+    m1 = run_stream_dedup(spark, str(corpus), out, ckpt)
     got = {r.url: r.text for r in spark.read.parquet(out).collect()}
     assert set(got) == {"u1", "u2"}
     # deterministic winner (ADVICE r3): min(text) within the batch,
@@ -196,7 +215,7 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
         ("u2", None, b"", "late duplicate", "en"),
         ("u3", None, b"", "three", "en"),
     ])
-    m2 = run_stream_dedup(spark, str(corpus), out, ckpt, groups=4)
+    m2 = run_stream_dedup(spark, str(corpus), out, ckpt)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 3  # u3 appended once; u1/u2 suppressed by state
     assert {r.url for r in rows} == {"u1", "u2", "u3"}
@@ -446,7 +465,7 @@ def test_stream_dedup_handles_null_text(spark, tmp_path):
     ).to_parquet(corpus / "a.parquet", index=False)
 
     run_stream_dedup(spark, str(corpus), str(tmp_path / "out"),
-                     str(tmp_path / "ckpt"), groups=4)
+                     str(tmp_path / "ckpt"))
     got = {r.url: r.text for r in
            spark.read.parquet(str(tmp_path / "out")).collect()}
     assert set(got) == {"u1", "u2", "u3"}
